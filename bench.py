@@ -126,104 +126,6 @@ def shrink_rows(spark, n_pages: int, maxzoom: int = 8):
     }
 
 
-def _widen_props(df, chars: int):
-    """Append a deterministic ~chars-byte string property to every
-    feature (wide-row corpus for the spool byte-budget probe)."""
-    from tippecanoe_spark.pipeline import (FEATURE_SCHEMA_DDL, pack_props,
-                                           unpack_props)
-
-    def fn(it):
-        pad = "x" * chars
-        for pdf in it:
-            pdf = pdf.copy()
-            pdf["props"] = [
-                (lambda kvt: pack_props(kvt[0] + ["pad"], kvt[1] + [0],
-                                        kvt[2] + [pad]))(unpack_props(b))
-                for b in pdf["props"]]
-            yield pdf
-
-    return df.mapInPandas(fn, schema=FEATURE_SCHEMA_DDL)
-
-
-def spool_memory_worker(mode: str, n_pages: int = 60000):
-    """Child JVM: polygon/line-heavy z0-hot as-needed build (the
-    drop-smallest mode disables both the prefilter and the point-only
-    shrink, so the z0 group carries every feature) while sampling the
-    peak RSS of the pyspark.daemon python workers.  mode='stream'
-    forces spool spilling (TS_SPOOL_MEM_ROWS=4096); mode='whole' is the
-    legacy whole-group applyInPandas encode.  A '-wide' suffix pads
-    every feature with a ~4 KB string property (10x-wider rows): the
-    spool's BYTE budget (TS_SPOOL_MEM_BYTES) must keep the delta-RSS
-    bounded where the whole-group encode grows with row width."""
-    import glob
-    import threading
-
-    wide = mode.endswith("-wide")
-    if wide:
-        mode = mode[: -len("-wide")]
-        n_pages = n_pages // 4  # same feature volume in bytes, wider rows
-    os.environ["TS_STREAM_ENCODE"] = "1" if mode == "stream" else "0"
-    if mode == "stream":
-        os.environ["TS_SPOOL_MEM_ROWS"] = "4096"
-        os.environ["TS_SPOOL_MEM_BYTES"] = str(8 << 20)
-
-    peak = [0]
-    stop = threading.Event()
-
-    def mon():
-        while not stop.is_set():
-            mx = 0
-            for d in glob.glob("/proc/[0-9]*"):
-                try:
-                    with open(d + "/cmdline", "rb") as f:
-                        if b"pyspark.daemon" not in f.read():
-                            continue
-                    with open(d + "/status") as f:
-                        for line in f:
-                            if line.startswith("VmRSS"):
-                                mx = max(mx, int(line.split()[1]))
-                                break
-                except OSError:
-                    continue
-            peak[0] = max(peak[0], mx)
-            time.sleep(0.2)
-
-    t = threading.Thread(target=mon, daemon=True)
-    t.start()
-
-    from tippecanoe_spark.config import TileConfig
-    from tippecanoe_spark.io.pages import extract_features_df, pages_df
-    from tippecanoe_spark.pipeline import build_tiles
-    from tippecanoe_spark.session import get_spark
-
-    spark = get_spark(app=f"spoolmem-{mode}", master="local[8]")
-    cfg = TileConfig(maxzoom=4, drop_smallest=True)
-    # warm build: worker pool + imports; its peak is the RSS baseline,
-    # so peak-above-baseline isolates the per-group working set
-    warm = extract_features_df(spark, pages_df(spark, 500, seed=7), cfg)
-    build_tiles(spark, warm, cfg).count()
-    time.sleep(0.5)
-    baseline = peak[0]
-    peak[0] = 0
-
-    feats = extract_features_df(spark, pages_df(spark, n_pages, seed=42), cfg)
-    if wide:
-        feats = _widen_props(feats, 4096)
-    t0 = time.time()
-    tiles = build_tiles(spark, feats, cfg)
-    agg = tiles.selectExpr("count(*) AS n", "sum(crc32(tile)) AS crc").collect()[0]
-    dt = time.time() - t0
-    spark.stop()
-    stop.set()
-    t.join(timeout=2)
-    print(json.dumps({
-        "baseline_worker_rss_kb": baseline,
-        "peak_worker_rss_kb": peak[0],
-        "delta_rss_kb": max(peak[0] - baseline, 0),
-        "tiles": agg["n"], "tiles_crc_sum": agg["crc"],
-        "seconds": round(dt, 3)}))
-
-
 def export_pages_geojson(path: str, n_pages: int, seed: int = 42) -> None:
     """The page corpus' embedded features as line-delimited GeoJSON —
     the identical feature set, consumable by the reference binary."""
@@ -273,9 +175,6 @@ def main():
         master = sys.argv[sys.argv.index("--scaling-worker") + 1]
         n_pages = int(sys.argv[sys.argv.index("--scaling-worker") + 2])
         print(json.dumps(tile_build_bench(master, n_pages)))
-        return
-    if "--spool-worker" in sys.argv:
-        spool_memory_worker(sys.argv[sys.argv.index("--spool-worker") + 1])
         return
 
     import statistics
@@ -395,24 +294,6 @@ def main():
     }
     spark.stop()
 
-    # bounded-group-memory evidence: peak python-worker RSS on a z0-hot
-    # as-needed build (prefilter and shrink both inapplicable), stream-
-    # spool vs whole-group encode, separate JVMs; byte-identity checked
-    # via tile crc sums
-    spool_mem = {}
-    for mode in ("stream", "whole", "stream-wide", "whole-wide"):
-        r = subprocess.run(
-            [sys.executable, __file__, "--spool-worker", mode],
-            capture_output=True, text=True, check=True)
-        spool_mem[mode] = json.loads(r.stdout.strip().splitlines()[-1])
-    for suffix in ("", "-wide"):
-        s, w = spool_mem[f"stream{suffix}"], spool_mem[f"whole{suffix}"]
-        spool_mem[f"identical_tiles{suffix}"] = (
-            s["tiles"] == w["tiles"]
-            and s["tiles_crc_sum"] == w["tiles_crc_sum"])
-        spool_mem[f"delta_rss_ratio{suffix}"] = round(
-            s["delta_rss_kb"] / max(w["delta_rss_kb"], 1), 3)
-
     total = round(sum(qtimes.values()), 3)
     out = {
         "metric": "bench_total_seconds",
@@ -435,7 +316,6 @@ def main():
         "shrink_drop_densest_z8": shrink_stats,
         "tile_build_10x": growth,
         "ann_lsh_candidates": ann_stats,
-        "spool_memory_z0_hot": spool_mem,
     }
 
     if "--scaling" in sys.argv:

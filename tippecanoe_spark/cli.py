@@ -584,38 +584,6 @@ def _split_args(argv):
     return eng, rest
 
 
-def _file_bbox_spark(spark, paths, cfg, layer):
-    """File bbox from the import-time bbox fields of feature_records
-    (identical to the local path / reference serialize-time bbox,
-    main.cpp:455-470) — one task per input file, tiny collect."""
-    import pandas as pd
-
-    files = spark.createDataFrame(
-        pd.DataFrame({"path": list(paths)})).repartition(len(paths), "path")
-
-    def part(it):
-        from .io.geojson import features_from_file
-
-        for b in it:
-            for r in b.itertuples(index=False):
-                lname = layer.get(r.path) if isinstance(layer, dict) else layer
-                feats = features_from_file(r.path, cfg, lname)
-                if feats:
-                    yield pd.DataFrame({
-                        "mnx": [min(f["bbox_minx"] for f in feats)],
-                        "mny": [min(f["bbox_miny"] for f in feats)],
-                        "mxx": [max(f["bbox_maxx"] for f in feats)],
-                        "mxy": [max(f["bbox_maxy"] for f in feats)],
-                    })
-
-    parts = files.mapInPandas(
-        part, schema="mnx long, mny long, mxx long, mxy long").collect()
-    if not parts:
-        return (0, 0, 0, 0)
-    return (min(r["mnx"] for r in parts), min(r["mny"] for r in parts),
-            max(r["mxx"] for r in parts), max(r["mxy"] for r in parts))
-
-
 def build_main(argv) -> int:
     eng, rest = _split_args(argv)
     cfg = options_to_config(rest)
@@ -717,7 +685,7 @@ def build_main(argv) -> int:
                                   description=eng["description"],
                                   layer_descriptions=eng["layer_descriptions"])
         else:
-            from .io.geojson import geojson_files_df
+            from .io.geojson import file_bbox_accumulator, geojson_files_df
             from .operators.stats import collect_layer_stats_spark
             from .pipeline import build_tiles
             from .session import get_spark
@@ -731,7 +699,9 @@ def build_main(argv) -> int:
             import copy as _copy
 
             parse_cfg = _copy.deepcopy(cfg)
-            df = geojson_files_df(spark, eng["inputs"], parse_cfg, layer=la)
+            bbox_acc = file_bbox_accumulator(spark)
+            df = geojson_files_df(spark, eng["inputs"], parse_cfg, layer=la,
+                                  bbox_acc=bbox_acc)
             df = df.persist()
             try:
                 if needs_guess:
@@ -741,7 +711,8 @@ def build_main(argv) -> int:
                                           cfg.basezoom, cfg.droprate,
                                           cfg.basezoom_marker_width)
                 layers = collect_layer_stats_spark(df, cfg)
-                file_bbox = _file_bbox_spark(spark, eng["inputs"], parse_cfg, la)
+                # the layer-stats scan has run the parse over every file
+                file_bbox = bbox_acc.value or (0, 0, 0, 0)
                 tiles_df = build_tiles(spark, df, cfg)
 
                 # streaming export: the tileset never lands on the driver as

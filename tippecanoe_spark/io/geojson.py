@@ -112,8 +112,31 @@ def features_from_file(path: str, cfg: TileConfig, layer: str | None = None,
     return feature_records(read_file_text(path), lname, cfg, seq_start)
 
 
+class _BBoxParam:
+    """Accumulator algebra for a (minx, miny, maxx, maxy) world-coord
+    box: elementwise min/max, None = no feature yet.  Idempotent, so a
+    retried task or a recomputed cache block cannot change the value."""
+
+    def zero(self, value):
+        return None
+
+    def addInPlace(self, a, b):
+        if a is None or b is None:
+            return b if a is None else a
+        return (min(a[0], b[0]), min(a[1], b[1]),
+                max(a[2], b[2]), max(a[3], b[3]))
+
+
+def file_bbox_accumulator(spark):
+    """Accumulator for ``geojson_files_df(..., bbox_acc=...)``: after an
+    action has scanned the parse, ``.value`` is the import-time bbox of
+    every input file (main.cpp:455-470), or None when no feature was
+    read."""
+    return spark.sparkContext.accumulator(None, _BBoxParam())
+
+
 def geojson_files_df(spark, paths, cfg: TileConfig,
-                     layer: str | dict | None = None):
+                     layer: str | dict | None = None, bbox_acc=None):
     """Distributed feature-file source: one task per input file, the
     reference's multi-source layout (main.cpp:1255-1298 names one layer
     per file; within-file parallel parsing is an optimization the
@@ -128,6 +151,9 @@ def geojson_files_df(spark, paths, cfg: TileConfig,
     without a cross-file count pass — the property a 1000-file 100 TB
     ingest needs, since a sequential prefix-count over files would
     serialize the read.
+
+    ``bbox_acc`` (``file_bbox_accumulator``) collects the files' bbox
+    from the same parse, so the metadata needs no second read.
 
     Returns a DataFrame in the cascade schema (pipeline.build_tiles
     input)."""
@@ -148,6 +174,11 @@ def geojson_files_df(spark, paths, cfg: TileConfig,
                 feats = features_from_file(r.path, cfg, lname,
                                            seq_start=int(r.fidx) << 40)
                 if feats:
+                    if bbox_acc is not None:
+                        bbox_acc.add((min(f["bbox_minx"] for f in feats),
+                                      min(f["bbox_miny"] for f in feats),
+                                      max(f["bbox_maxx"] for f in feats),
+                                      max(f["bbox_maxy"] for f in feats)))
                     yield features_to_pdf(feats)
 
     from ..pipeline import FEATURE_SCHEMA_DDL

@@ -278,14 +278,21 @@ def _sort_rows_by_tile(pdf: pd.DataFrame) -> pd.DataFrame:
     return pdf.iloc[order]
 
 
+def _zoom_pass_params(pass_params: dict | None, z: int) -> dict | None:
+    """A fresh copy of zoom z's entry of a ``{z: params}`` map (None when
+    no as-needed mode runs): process_tile ratchets its copy tile-locally."""
+    return dict(pass_params[z]) if pass_params else None
+
+
 def _encode_sorted_frame(pdf: pd.DataFrame, cfg: TileConfig, prefilter: bool,
                          pass_params: dict | None = None,
                          still_flag: list | None = None) -> list:
     """Encode every COMPLETE (z, tile) run of an already-sorted frame
-    (the vectorized core shared by the whole-group processor and the
-    streaming encoder's in-batch path).  One prefilter pass per z slice,
-    one dict conversion for all slow rows, columnar fast path for
-    all-point runs.  Returns (z, x, y, tile) records."""
+    (the streaming encoder's in-batch path).  One prefilter pass per z
+    slice, one dict conversion for all slow rows, columnar fast path for
+    all-point runs.  ``pass_params``: None, or the as-needed modes'
+    zoom-global ratchet values as ``{z: params}`` — each tile runs with
+    its own zoom's entry.  Returns (z, x, y, tile, gops) records."""
     from .operators.tiler import (FAST_LIMIT_EXCEEDED, encode_points_tile_fast,
                                   prefilter_dropped_mask)
 
@@ -350,7 +357,7 @@ def _encode_sorted_frame(pdf: pd.DataFrame, cfg: TileConfig, prefilter: bool,
                 # ladder (detail reduction / fraction shrink)
                 tb, _children, stats = process_tile(
                     _pdf_rows_to_dicts(pdf.iloc[st: st + cnt]), z, tx, ty,
-                    cfg, pass_params=dict(pass_params) if pass_params else None,
+                    cfg, pass_params=_zoom_pass_params(pass_params, z),
                     emit_children=False)
                 if still_flag is not None and stats["still_dropping"]:
                     still_flag.append(True)
@@ -361,7 +368,7 @@ def _encode_sorted_frame(pdf: pd.DataFrame, cfg: TileConfig, prefilter: bool,
         else:
             tile_bytes, _children, stats = process_tile(
                 slow_rows[slow_pos: slow_pos + cnt], z, tx, ty, cfg,
-                pass_params=dict(pass_params) if pass_params else None,
+                pass_params=_zoom_pass_params(pass_params, z),
                 emit_children=False)
             slow_pos += cnt
             if still_flag is not None and stats["still_dropping"]:
@@ -369,34 +376,6 @@ def _encode_sorted_frame(pdf: pd.DataFrame, cfg: TileConfig, prefilter: bool,
             if tile_bytes is not None:
                 recs.append((z, tx, ty, tile_bytes, stats["geom_ops"]))
     return recs
-
-
-def _make_encode_processor(cfg: TileConfig, prefilter: bool, pass_params: dict | None = None):
-    """Shard group function: encode every (z, tile) run in the shard.
-
-    The fan-out is NOT done here (see fanout_pdf) — this branch only runs
-    the order-dependent drop ladder + simplify + MVT encode, so the
-    optional exact prefilter (can_prefilter_dropped) can slash the row
-    count before the per-feature Python loop.  Rows for ALL zooms arrive
-    in one shuffle (column _z)."""
-
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.drop(columns=["_shard"])
-        order = np.lexsort((
-            pdf["seq"].to_numpy(),
-            pdf["ix"].to_numpy().astype(np.uint64),
-            pdf["tile_y"].to_numpy(),
-            pdf["tile_x"].to_numpy(),
-            pdf["_z"].to_numpy(),
-        ))
-        pdf = pdf.iloc[order]
-        recs = _encode_sorted_frame(pdf, cfg, prefilter, pass_params)
-        if not recs:
-            return _empty_tiles_pdf()
-        return pd.DataFrame.from_records(
-            recs, columns=["z", "x", "y", "tile", "gops"])
-
-    return fn
 
 
 def _empty_tiles_pdf() -> pd.DataFrame:
@@ -643,6 +622,10 @@ def _make_stream_encoder(cfg: TileConfig, prefilter: bool,
     one-shot dict conversion; spilled runs stream through process_tile's
     re-iterable retry ladder with survivor-bounded memory.
 
+    ``pass_params``: None, or the as-needed pass-1 ratchet values as
+    ``{z: params}``; one encoder serves every zoom of the sorted stream,
+    each tile reading its own zoom's entry.
+
     ``still_acc``: optional Spark accumulator OR-ing per-tile
     still_dropping (extend-zooms decision at the last zoom).  Task
     retries can only re-add — an OR is idempotent, so transformation-
@@ -659,7 +642,7 @@ def _make_stream_encoder(cfg: TileConfig, prefilter: bool,
     def encode_run(key, spool):
         z, tx, ty = key
         try:
-            pp = dict(pass_params) if pass_params else None
+            pp = _zoom_pass_params(pass_params, z)
             if not spool.spilled:
                 pdf = spool.concat()
                 if prefilter and len(pdf):
@@ -719,9 +702,17 @@ def _make_stream_encoder(cfg: TileConfig, prefilter: bool,
     return fn
 
 
-def _make_stream_pass0(cfg: TileConfig, params: dict):
-    """Pass-0 discovery over the sorted stream: run every tile's ladder
-    without writing, emit one per-partition row of ratchet maxima."""
+def _make_stream_pass0(cfg: TileConfig, params_by_z: dict):
+    """Pass-0 discovery over the sorted stream (traverse_zooms'
+    non-writing pass, tile.cpp:2778-2880): run every tile's ladder from
+    its zoom's INITIAL params ``params_by_z[z]`` without writing, and
+    emit one row of ratchet maxima (fraction minimum) per (partition,
+    z) present.  One job covers every zoom, because a zoom's pass 0
+    starts from ``_zoom_params_init`` and carries nothing over from the
+    zoom above; the driver folds the rows with ``_merge_pass0_rows``
+    (max/min, so row order and task retries cannot change the result).
+    mingap travels as decimal text: it is a 64-bit unsigned gap that
+    neither a long nor a double holds exactly."""
     import os as _os
 
     from .operators.tiler import process_tile
@@ -729,18 +720,18 @@ def _make_stream_pass0(cfg: TileConfig, params: dict):
     mem_rows = int(_os.environ.get(_SPOOL_MEM_ROWS_ENV, str(1 << 16)))
 
     def fn(it):
-        agg = {"gamma_out": 0.0, "mingap_out": 0, "minextent_out": 0,
-               "fraction_out": 1.0}
-        still = False
+        agg = {}  # z -> [gamma, mingap, minextent, fraction, still]
 
-        def merge(stats):
-            nonlocal still
-            for k in ("gamma_out", "mingap_out", "minextent_out"):
-                if stats[k] > agg[k]:
-                    agg[k] = stats[k]
-            if stats["fraction_out"] < agg["fraction_out"]:
-                agg["fraction_out"] = stats["fraction_out"]
-            still = still or stats["still_dropping"]
+        def run(rows, z, tx, ty):
+            _tb, _ch, st = process_tile(
+                rows, z, tx, ty, cfg, pass_params=dict(params_by_z[z]),
+                emit_children=False)
+            a = agg.setdefault(z, [0.0, 0, 0, 1.0, False])
+            a[0] = max(a[0], st["gamma_out"])
+            a[1] = max(a[1], st["mingap_out"])
+            a[2] = max(a[2], st["minextent_out"])
+            a[3] = min(a[3], st["fraction_out"])
+            a[4] = a[4] or st["still_dropping"]
 
         for seg in _stream_segments(it, mem_rows):
             if seg[0] == "frame":
@@ -753,30 +744,37 @@ def _make_stream_pass0(cfg: TileConfig, params: dict):
                 bounds = [0] + [i for i in range(1, n)
                                 if zs[i] != zs[i - 1] or txs[i] != txs[i - 1]
                                 or tys[i] != tys[i - 1]] + [n]
-                for bi in range(len(bounds) - 1):
-                    lo, hi = bounds[bi], bounds[bi + 1]
-                    _tb, _ch, stats = process_tile(
-                        rows[lo:hi], int(zs[lo]), int(txs[lo]), int(tys[lo]),
-                        cfg, pass_params=dict(params), emit_children=False)
-                    merge(stats)
+                for lo, hi in zip(bounds[:-1], bounds[1:]):
+                    run(rows[lo:hi], int(zs[lo]), int(txs[lo]), int(tys[lo]))
             else:
                 (z, tx, ty), spool = seg[1], seg[2]
                 try:
-                    rows_arg = spool.iter_rows if spool.spilled else \
-                        _pdf_rows_to_dicts(spool.concat())
-                    _tb, _ch, stats = process_tile(
-                        rows_arg, z, tx, ty, cfg,
-                        pass_params=dict(params), emit_children=False)
+                    run(spool.iter_rows if spool.spilled else
+                        _pdf_rows_to_dicts(spool.concat()), z, tx, ty)
                 finally:
                     spool.close()
-                merge(stats)
-        yield pd.DataFrame(
-            [(agg["gamma_out"], float(agg["mingap_out"]),
-              agg["minextent_out"], agg["fraction_out"], still)],
-            columns=["gamma_out", "mingap", "minextent", "fraction",
-                     "still_dropping"])
+        yield pd.DataFrame({
+            "z": pd.Series(list(agg), dtype="int32"),
+            "gamma_out": pd.Series([a[0] for a in agg.values()], dtype="float64"),
+            "mingap": pd.Series([str(a[1]) for a in agg.values()], dtype="object"),
+            "minextent": pd.Series([a[2] for a in agg.values()], dtype="int64"),
+            "fraction": pd.Series([a[3] for a in agg.values()], dtype="float64"),
+            "still_dropping": pd.Series([a[4] for a in agg.values()], dtype="bool"),
+        })
 
     return fn
+
+
+def _merge_pass0_rows(params_by_z: dict, rows) -> bool:
+    """Fold pass-0 rows into ``{z: params}`` in place; returns the OR of
+    their still_dropping flags."""
+    still = False
+    for r in rows:
+        _merge_zoom_stats(params_by_z[r["z"]], {
+            "gamma_out": r["gamma_out"], "mingap_out": int(r["mingap"]),
+            "minextent_out": r["minextent"], "fraction_out": r["fraction"]})
+        still = still or bool(r["still_dropping"])
+    return still
 
 
 def _bucket_index_expr(bounds):
@@ -970,17 +968,21 @@ def build_tiles(spark, features_df, cfg: TileConfig, minzoom_mode: str = "exact"
 
     Structure (the 100 TB design):
 
-      features_z  ──mapInPandas(fanout_pdf)──▶ features_{z+1}   [narrow!]
-           │
-           └─ groupBy(shard of (tile_x, tile_y)) ─▶ encode ─▶ tiles_z
+      features ─ assign_minzoom_spark ─ rebalance
+        └─ cascade_all_zooms: one narrow mapInPandas, every zoom (_z)
+             └─ _encode_stage: one sort by packed (z, x, y), then the
+                streaming encode (as-needed modes: one pass-0 job and
+                one pass-1 stage for all zooms)
 
     The cascade between zooms is a narrow map (rewrite() confines
     children to their parent's subtree, so no shuffle is needed to keep
-    tile groups together until the encode).  The only shuffles are the
-    per-zoom encode groupBys; the exact dropped-point prefilter
-    (operators.tiler.can_prefilter_dropped) keeps the hot z0-z4 tile
-    groups small.  Returns a DataFrame (z int, x long, y long, tile
-    binary).
+    tile groups together until the encode).  The encode sort is the
+    only big shuffle; the exact dropped-point prefilter
+    (operators.tiler.can_prefilter_dropped) and the witness-lemma
+    shrink keep the hot z0-z4 tile groups small.
+    --extend-zooms-if-still-dropping builds level by level instead
+    (``_build_tiles_extend_spark``).  Returns a DataFrame (z int, x
+    long, y long, tile binary, gops long).
 
     ``skip_minzoom``: features_df already carries an exact fmz column
     (e.g. the streaming maintainer assigns it once and reuses it for
@@ -995,7 +997,6 @@ def build_tiles(spark, features_df, cfg: TileConfig, minzoom_mode: str = "exact"
     df = features_df if skip_minzoom else \
         assign_minzoom_spark(features_df, cfg, minzoom_mode)
     par = spark.sparkContext.defaultParallelism
-    import os as _os
 
     if cfg.one_tile is not None:
         # --one-tile z/x/y debug build (main.cpp:1871-1875): the CLI
@@ -1027,7 +1028,7 @@ def build_tiles(spark, features_df, cfg: TileConfig, minzoom_mode: str = "exact"
             .sortWithinPartitions("_sx", "seq")
             .drop("_sx")
         )
-    elif _os.environ.get("TS_CASCADE_REBALANCE", "1") == "1":
+    else:
         # the fmz pass leaves data range-partitioned by ix (spatially
         # clustered) — rebalance before the cascade, whose fan-out cost
         # is proportional to local feature density (per-feature,
@@ -1091,24 +1092,17 @@ def _build_tiles_extend_spark(spark, df, cfg_in: TileConfig, par: int):
                 cur.withColumn("_z", F.lit(int(z)).cast("int")), n_shards)
             # one sort shuffle shared by both passes
             sub = sub.localCheckpoint(eager=False)
-            params = _zoom_params_init(z, zoom_cfg)
+            params = {z: _zoom_params_init(z, zoom_cfg)}
             if zoom_cfg.any_as_needed:
                 # pass-0 discovery runs only for the additional[]
                 # as-needed flags (tile.cpp:2780-2782); P_DYNAMIC_DROP
                 # stays single-pass with a tile-local fraction
-                srows = sub.mapInPandas(
-                    _make_stream_pass0(zoom_cfg, params),
-                    schema=_PASS0_SCHEMA_DDL).collect()
-                for r in srows:
-                    _merge_zoom_stats(params, {
-                        "gamma_out": r["gamma_out"], "mingap_out": int(r["mingap"]),
-                        "minextent_out": r["minextent"],
-                        "fraction_out": r["fraction"]})
-                    still = still or bool(r["still_dropping"])
+                still = _merge_pass0_rows(params, sub.mapInPandas(
+                    _make_stream_pass0(zoom_cfg, _copy.deepcopy(params)),
+                    schema=_PASS0_SCHEMA_DDL).collect())
             acc = spark.sparkContext.accumulator(0)
             tiles_z = sub.mapInPandas(
-                _make_stream_encoder(zoom_cfg, False,
-                                     pass_params=dict(params),
+                _make_stream_encoder(zoom_cfg, False, pass_params=params,
                                      still_acc=acc),
                 schema=TILES_SCHEMA_DDL)
             # the extend decision needs pass-1 to have RUN: materialize
@@ -1140,115 +1134,52 @@ def _build_tiles_extend_spark(spark, df, cfg_in: TileConfig, par: int):
     return out
 
 
-_PASS0_SCHEMA_DDL = ("gamma_out double, mingap double, minextent long, "
+_PASS0_SCHEMA_DDL = ("z int, gamma_out double, mingap string, minextent long, "
                      "fraction double, still_dropping boolean")
 
 
 def _encode_stage(allz, cfg: TileConfig, prefilter: bool, par: int):
-    """Encode shuffle(s) over the cascaded (feature, _z) rows: one
-    hash-sharded pass for plain modes, two passes per zoom (driver
-    ratchet merge between them) for the as-needed modes.
+    """Encode over the cascaded (feature, _z) rows: one hash-sharded
+    sort (``_sorted_for_encode``) feeding the streaming encoder.
 
-    Default path: sorted-iterator streaming encode (repartition by tile
-    + sortWithinPartitions + mapInPandas over a disk-spilling per-run
-    spool) — a hot z0-z4 tile group never materializes as one pandas
-    frame.  TS_STREAM_ENCODE=0 falls back to the old whole-group
-    applyInPandas (debug/A-B only)."""
-    import os as _os
+    Plain modes run that as one stage.  The as-needed modes need two
+    passes per zoom with a zoom-global ratchet merged on the driver
+    between them (traverse_zooms, tile.cpp:2778-2880), and every zoom
+    shares one job shape:
 
-    from pyspark.sql import functions as F
+      sort rows with _z >= minzoom ─ localCheckpoint
+        ├─ pass 0: one mapInPandas over all zooms → one ratchet row
+        │          per (partition, z) → collect → {z: params}
+        └─ pass 1: one mapInPandas over all zooms, each tile encoded
+                   with its own zoom's params
 
-    n_shards = max(par * 8, 16)
-    # streaming path: one reduce task per core wave is enough — the
-    # spool absorbs hot-group skew, and 8x-overpartitioning costs more
-    # in task/Arrow setup than it buys in balance (measured)
+    A zoom's pass 0 starts from ``_zoom_params_init`` alone (no carry-
+    over from the zoom above), so discovering all zooms at once is the
+    per-zoom protocol exactly.  A hot z0-z4 tile group never
+    materializes as one pandas frame: runs crossing batch boundaries
+    stream through the disk-spilling spool."""
+    # one reduce task per core wave is enough — the spool absorbs
+    # hot-group skew, and 8x-overpartitioning costs more in task/Arrow
+    # setup than it buys in balance (measured)
     n_parts = max(par * 2, 8)
-    stream = _os.environ.get("TS_STREAM_ENCODE", "1") == "1"
-
     if not cfg.any_as_needed:
-        if stream:
-            return _sorted_for_encode(allz, n_parts).mapInPandas(
-                _make_stream_encoder(cfg, prefilter), schema=TILES_SCHEMA_DDL)
-        shard = F.pmod(F.hash("_z", "tile_x", "tile_y"), F.lit(n_shards))
-        enc = _make_encode_processor(cfg, prefilter)
-        return (
-            allz.withColumn("_shard", shard)
-            .groupBy("_shard")
-            .applyInPandas(enc, schema=TILES_SCHEMA_DDL)
-        )
+        return _sorted_for_encode(allz, n_parts).mapInPandas(
+            _make_stream_encoder(cfg, prefilter), schema=TILES_SCHEMA_DDL)
 
-    # as-needed modes: two encode passes per zoom with the zoom-global
-    # parameter ratchet collected on the driver between them
-    # (traverse_zooms, tile.cpp:2778-2880)
     if cfg.extend_zooms:
         raise NotImplementedError("--extend-zooms on the Spark path: use build_tiles_local")
-    # localCheckpoint (not persist): materialized on the first stats
-    # action, reused by every later pass, and reclaimed by the context
-    # cleaner once the returned DataFrame is dropped — no cache leak
-    # across repeated builds in one session
-    allz = allz.localCheckpoint(eager=False)
-    tile_dfs = []
-    for z in range(cfg.minzoom, cfg.maxzoom + 1):
-        params = _zoom_params_init(z, cfg)
-        if stream:
-            sub = _sorted_for_encode(allz.filter(F.col("_z") == z), n_parts)
-            # one sort shuffle reused by both passes: localCheckpoint
-            # materializes the sorted partitions on the pass-0 action
-            sub = sub.localCheckpoint(eager=False)
-            srows = sub.mapInPandas(
-                _make_stream_pass0(cfg, params), schema=_PASS0_SCHEMA_DDL).collect()
-        else:
-            shard = F.pmod(F.hash("_z", "tile_x", "tile_y"), F.lit(n_shards))
-            sub = allz.filter(F.col("_z") == z).withColumn("_shard", shard)
-            srows = sub.groupBy("_shard").applyInPandas(
-                _make_pass0_processor(cfg, z, params),
-                schema=_PASS0_SCHEMA_DDL).collect()
-        for r in srows:
-            _merge_zoom_stats(params, {
-                "gamma_out": r["gamma_out"], "mingap_out": int(r["mingap"]),
-                "minextent_out": r["minextent"], "fraction_out": r["fraction"]})
-        if stream:
-            tile_dfs.append(sub.mapInPandas(
-                _make_stream_encoder(cfg, False, pass_params=dict(params)),
-                schema=TILES_SCHEMA_DDL))
-        else:
-            enc = _make_encode_processor(cfg, False, pass_params=dict(params))
-            tile_dfs.append(
-                sub.groupBy("_shard").applyInPandas(enc, schema=TILES_SCHEMA_DDL))
-    out = tile_dfs[0]
-    for t in tile_dfs[1:]:
-        out = out.unionByName(t)
-    return out
+    from pyspark.sql import functions as F
 
-
-def _make_pass0_processor(cfg: TileConfig, z: int, params: dict):
-    """Pass-0 discovery: run every tile's ladder without writing, emit
-    the per-shard ratchet maxima."""
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.drop(columns=["_shard"])
-        pdf = _sort_rows_by_tile(pdf)
-        rows = _pdf_rows_to_dicts(pdf)
-        txs = pdf["tile_x"].to_numpy()
-        tys = pdf["tile_y"].to_numpy()
-        n = len(rows)
-        bounds = [0] + [i for i in range(1, n) if txs[i] != txs[i - 1] or tys[i] != tys[i - 1]] + [n]
-        agg = {"gamma_out": 0.0, "mingap_out": 0, "minextent_out": 0, "fraction_out": 1.0}
-        still = False
-        for bi in range(len(bounds) - 1):
-            lo, hi = bounds[bi], bounds[bi + 1]
-            _tb, _ch, stats = process_tile(
-                rows[lo:hi], z, int(txs[lo]), int(tys[lo]), cfg,
-                pass_params=dict(params), emit_children=False)
-            for k in ("gamma_out", "mingap_out", "minextent_out"):
-                if stats[k] > agg[k]:
-                    agg[k] = stats[k]
-            if stats["fraction_out"] < agg["fraction_out"]:
-                agg["fraction_out"] = stats["fraction_out"]
-            still = still or stats["still_dropping"]
-        return pd.DataFrame(
-            [(agg["gamma_out"], float(agg["mingap_out"]),
-              agg["minextent_out"], agg["fraction_out"], still)],
-            columns=["gamma_out", "mingap", "minextent", "fraction",
-                     "still_dropping"])
-
-    return fn
+    # localCheckpoint (not persist): the sorted partitions materialize
+    # on the pass-0 action, pass 1 reads them back, and the context
+    # cleaner reclaims them once the returned DataFrame is dropped — no
+    # cache leak across repeated builds in one session
+    srt = _sorted_for_encode(allz.filter(F.col("_z") >= cfg.minzoom),
+                             n_parts).localCheckpoint(eager=False)
+    params = {z: _zoom_params_init(z, cfg)
+              for z in range(cfg.minzoom, cfg.maxzoom + 1)}
+    _merge_pass0_rows(params, srt.mapInPandas(
+        _make_stream_pass0(cfg, {z: dict(p) for z, p in params.items()}),
+        schema=_PASS0_SCHEMA_DDL).collect())
+    return srt.mapInPandas(_make_stream_encoder(cfg, False, pass_params=params),
+                           schema=TILES_SCHEMA_DDL)
